@@ -495,6 +495,33 @@ def test_triangles_joins_are_hash_joins(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize("key", ["q_graph_closeness", "q_graph_betweenness"])
+def test_graph_eager_levels_broadcast_not_sort_merge(spark, monkeypatch, key):
+    """Every per-level frame of the eager frontier loops (seeded_bfs hops;
+    betweenness forward and backward levels) joins through a broadcast of
+    its measured-small side and never sort-merges the edge list
+    (plans/r13/q_graph_*_after.txt). Each level hides behind its eager
+    localCheckpoint, so record the executed plan of every eagerly
+    checkpointed frame while the key is built; the first is level 0, the
+    seed set itself, which joins nothing."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    levels: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, eager=True, storageLevel=None):
+        if eager:
+            levels.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, eager, storageLevel)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    contract.QUERIES[key](spark, SF_DIR)
+    assert len(levels) > 1, f"{key}: no per-level frame was checkpointed"
+    for i, plan in enumerate(levels[1:], 1):
+        assert "SortMergeJoin" not in plan, f"{key} level frame {i}:\n{plan}"
+        assert "BroadcastHashJoin" in plan, f"{key} level frame {i}:\n{plan}"
+
+
 def test_collocations_single_corpus_pass(spark):
     # The corpus is scanned once: margins re-aggregate the bigram-count
     # table; N and both margins come back broadcast.

@@ -5,7 +5,7 @@ contract), filter composition, union cardinality."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -154,35 +154,51 @@ def test_pagerank_matches_power_iteration(spark, edges):
 @given(edges=st.lists(
     st.tuples(st.integers(0, 12), st.integers(0, 12)).filter(lambda e: e[0] != e[1]),
     min_size=1, max_size=25, unique=True))
+# the two seeds reach each other and share later nodes
+@example(edges=[(0, 1), (1, 2), (2, 0), (1, 3), (3, 4), (4, 5)])
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_bfs_matches_reference_bfs(spark, edges):
     """bfs() must agree with a plain queue BFS: min hop distance from
-    the source set along directed edges, capped at max_hops."""
+    the source set along directed edges, capped at max_hops. On the
+    same graph, seeded_bfs() must agree with one such BFS per seed."""
     from collections import deque
 
-    from trembita_spark.operators.graph import bfs
+    from trembita_spark.operators.graph import bfs, seeded_bfs
 
     sources = sorted({a for a, _ in edges})[:2]
     max_hops = 3
     adj: dict[int, list[int]] = {}
     for a, b in edges:
         adj.setdefault(a, []).append(b)
-    expected = {s: 0 for s in sources}
-    q = deque(sources)
-    while q:
-        u = q.popleft()
-        if expected[u] >= max_hops:
-            continue
-        for v in adj.get(u, []):
-            if v not in expected:
-                expected[v] = expected[u] + 1
-                q.append(v)
+
+    def reference(starts):
+        dist = {s: 0 for s in starts}
+        q = deque(starts)
+        while q:
+            u = q.popleft()
+            if dist[u] >= max_hops:
+                continue
+            for v in adj.get(u, []):
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    q.append(v)
+        return dist
 
     edf = spark.createDataFrame(edges, "src long, dst long")
     sdf = spark.createDataFrame([(s,) for s in sources], "node long")
     got = {r.node: r.dist for r in bfs(edf, sdf, max_hops=max_hops).collect()}
+    expected = reference(sources)
     assert got == expected, (got, expected)
+
+    got_seeded = {
+        (r.seed, r.node): r.dist
+        for r in seeded_bfs(edf, sdf, max_hops=max_hops).collect()
+    }
+    expected_seeded = {
+        (s, v): d for s in sources for v, d in reference([s]).items()
+    }
+    assert got_seeded == expected_seeded, (got_seeded, expected_seeded)
 
 
 @given(

@@ -3794,7 +3794,7 @@ def q_graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Topological LAYERING of a DAG (Kahn rounds): the degree-ordered
     # orientation of the co-basket graph is acyclic by construction
     # (every edge points toward the higher-(degree, id) endpoint — the
-    # _triangles orientation), and each round peels the current
+    # triangle_count orientation), and each round peels the current
     # SOURCES (no surviving in-edge) into the next layer — the
     # dependency-scheduling primitive ("what can run in wave r").
     # Three unrolled rounds (the pagerank fixed-recurrence convention);
@@ -3805,10 +3805,9 @@ def q_graph_topo_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all-pairs anywhere; for deep DAGs switch to the pointer-jumping
     # longest-path form (O(log d) rounds like q_dedup_clusters).
     from trembita_spark.contract import table as _t
+    from trembita_spark.operators.graph import _undirected
 
-    e0 = _cobasket_pairs(spark, sf_dir).select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).where(F.col("u") != F.col("v")).distinct()
+    e0 = _undirected(_cobasket_pairs(spark, sf_dir))
     deg = (
         e0.select(F.col("u").alias("node"))
         .unionAll(e0.select(F.col("v").alias("node")))

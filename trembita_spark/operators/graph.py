@@ -32,8 +32,105 @@ dangling mass uniformly); both variants are oracle-checked
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Largest measured row count that _known_small still broadcast-hints.
+_BROADCAST_ROWS = 1_000_000
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Canonical undirected edge frame (u, v): every edge of ``edges``
+    (src, dst) once as u < v, self-loops dropped. No lineage cut —
+    callers that reuse the frame checkpoint it themselves."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _directed_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(edges, nodes) for the fixed-k recurrences: the (src, dst) edge
+    frame and its distinct endpoint ``node`` set, each lazily
+    localCheckpoint-ed — every iteration re-reads both (module
+    docstring)."""
+    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    return edges, nodes
+
+
+def _known_small(df: DataFrame, rows: int) -> DataFrame:
+    """Broadcast-hint ``df`` when the caller has MEASURED it small.
+
+    Iterative graph frames are localCheckpoint-ed RDD scans, whose size
+    estimate is the catalog default (``Long.Max``) — the planner
+    therefore picks SortMergeJoin and re-shuffles the |E|-row edges
+    frame on EVERY level even when the frontier is a few thousand rows,
+    and AQE cannot rescue it (RDD scans are not shuffle query stages,
+    so no runtime size ever becomes visible). The loops here already
+    materialize each level eagerly and know its exact count, so they
+    can make the size-based call the planner can't: hint broadcast
+    below the row threshold, fall back to the planner's own choice
+    (shuffle join) above it — exactly AQE's decision rule, applied
+    where AQE is blind. Scale-adaptive by construction: a 100 TB
+    frontier of hundreds of millions of rows exceeds the threshold and
+    keeps today's shuffle plan."""
+    if rows <= _BROADCAST_ROWS:
+        return F.broadcast(df)
+    return df
+
+
+def _frontier_levels(
+    edges: DataFrame,
+    l0: DataFrame,
+    keys: list[str],
+    expand: Callable[[DataFrame], DataFrame],
+    max_hops: int,
+) -> list[tuple[DataFrame, int]]:
+    """The eager frontier loop shared by bfs, seeded_bfs and the
+    betweenness forward pass: [(level frame, row count)], level 0 first,
+    up to ``max_hops`` levels past it, stopping at the first empty one.
+
+    Each hop joins the last level to ``edges`` on node = src, lets
+    ``expand`` project (and aggregate) the join to the next level's
+    columns, and anti-joins out every ``keys`` tuple already visited.
+    Every level ends in an eager localCheckpoint plus count — without
+    the cut level k's plan nests k joins deep and re-executes ancestor
+    levels (the connected_components lesson, dedup.py), and the count
+    both stops the loop and sizes the :func:`_known_small` hints on the
+    frontier and visited set, so the |E| edges frame is streamed in
+    place instead of re-shuffled per hop. Levels stay separate
+    checkpointed frames, unioned lazily by the callers (re-materializing
+    the cumulative set per hop costs O(levels²) checkpoint writes)."""
+    l0 = l0.localCheckpoint(eager=True)
+    levels = [(l0, l0.count())]
+    for _ in range(max_hops):
+        frontier, n_frontier = levels[-1]
+        fb = _known_small(frontier, n_frontier)
+        visited = l0.select(*keys)
+        for lvl, _n in levels[1:]:
+            visited = visited.unionByName(lvl.select(*keys))
+        n_visited = sum(n for _lvl, n in levels)
+        nxt = (
+            expand(fb.join(edges, fb.node == edges.src))
+            .join(_known_small(visited, n_visited), keys, "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        n_nxt = nxt.count()
+        if n_nxt == 0:
+            break
+        levels.append((nxt, n_nxt))
+    return levels
 
 
 def pagerank(
@@ -52,13 +149,7 @@ def pagerank(
     The dangling mass is a single-row aggregate (anti join scores ⟕̸
     outdeg → sum) broadcast back onto the update — one extra tiny-side
     shuffle per iteration, nothing proportional to |E|."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed_nodes(edges)
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     outdeg = edges.groupBy(F.col("src").alias("o_node")).agg(
         F.count(F.lit(1)).alias("outdeg")
@@ -67,17 +158,9 @@ def pagerank(
         "node", "n", (F.lit(1.0) / F.col("n")).alias("score")
     )
     for _ in range(iters):
-        contrib = (
-            edges.join(scores, edges.src == scores.node)
-            .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
-            .select(
-                F.col("dst"),
-                (F.col("score") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
+        contrib = _push_mass(edges, scores, outdeg)
         updated = scores.join(contrib, scores.node == contrib.dst, "left")
+        in_mass = F.coalesce("in_mass", F.lit(0.0))
         if redistribute_dangling:
             dangling = (
                 scores.join(
@@ -85,28 +168,28 @@ def pagerank(
                 )
                 .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("dm"))
             )
-            scores = updated.crossJoin(F.broadcast(dangling)).select(
-                "node",
-                "n",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping
-                    * (
-                        F.coalesce("in_mass", F.lit(0.0))
-                        + F.col("dm") / F.col("n")
-                    )
-                ).alias("score"),
-            )
-        else:
-            scores = updated.select(
-                "node",
-                "n",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("score"),
-            )
+            updated = updated.crossJoin(F.broadcast(dangling))
+            in_mass = in_mass + F.col("dm") / F.col("n")
+        scores = updated.select(
+            "node",
+            "n",
+            ((1.0 - damping) / F.col("n") + damping * in_mass).alias("score"),
+        )
     return scores.select("node", "score")
+
+
+def _push_mass(edges: DataFrame, scores: DataFrame, outdeg: DataFrame) -> DataFrame:
+    """(dst, in_mass) = Σ_{u→dst} score(u)/outdeg(u): the mass one
+    power-method step pushes along ``edges``, shared by pagerank and
+    personalized_pagerank. ``outdeg`` (o_node, outdeg) joins in
+    broadcast."""
+    return (
+        edges.join(scores, edges.src == scores.node)
+        .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
+        .select(F.col("dst"), (F.col("score") / F.col("outdeg")).alias("contrib"))
+        .groupBy("dst")
+        .agg(F.sum("contrib").alias("in_mass"))
+    )
 
 
 def bfs(edges: DataFrame, sources: DataFrame, max_hops: int = 4) -> DataFrame:
@@ -128,43 +211,18 @@ def bfs(edges: DataFrame, sources: DataFrame, max_hops: int = 4) -> DataFrame:
     """
     # Every hop joins the frontier to edges; the lazy cut stops each
     # level's eager checkpoint job from re-running the edge derivation.
-    # Frontier/visited are broadcast-hinted via their measured counts
-    # (_known_small): checkpointed RDD scans otherwise estimate as huge
-    # and force a SortMergeJoin that re-shuffles |E| every hop. Levels
-    # stay separate checkpointed frames, unioned lazily at the end (the
-    # old shape re-materialized the whole cumulative dist per hop).
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    l0 = (
-        sources.select("node")
-        .distinct()
-        .select("node", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
+    l0 = sources.select("node").distinct().select("node", F.lit(0).alias("dist"))
+    levels = _frontier_levels(
+        edges,
+        l0,
+        ["node"],
+        lambda j: j.select(F.col("dst").alias("node")).distinct(),
+        max_hops,
     )
-    levels = [(l0.select("node"), l0.count())]
-    dist_parts = [l0]
-    frontier, n_frontier = levels[0]
-    for hop in range(1, max_hops + 1):
-        fb = _known_small(frontier, n_frontier)
-        visited = levels[0][0]
-        for lvl, _n in levels[1:]:
-            visited = visited.unionByName(lvl)
-        n_visited = sum(n for _lvl, n in levels)
-        nxt = (
-            fb.join(edges, fb.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(_known_small(visited, n_visited), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == 0:
-            break
-        levels.append((nxt, n_nxt))
-        dist_parts.append(nxt.select("node", F.lit(hop).alias("dist")))
-        frontier, n_frontier = nxt, n_nxt
-    dist = dist_parts[0]
-    for part in dist_parts[1:]:
-        dist = dist.unionByName(part)
+    dist = levels[0][0]
+    for hop, (lvl, _n) in enumerate(levels[1:], 1):
+        dist = dist.unionByName(lvl.select("node", F.lit(hop).alias("dist")))
     return dist
 
 
@@ -189,14 +247,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     because the supplier graph saturates). The closing check runs
     against the canonical u<v edge set via one semi join.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused 3x: degrees, wedges, close
-    )
+    # reused 3x: degrees, wedges, close
+    e = _undirected(edges).localCheckpoint(eager=False)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -265,14 +317,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     checkpoints cost a scheduler round-trip each, measurably dominant
     at small |E|). Unlike bfs(), no per-round isEmpty() forces eager
     evaluation here."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    und = _undirected(edges).localCheckpoint(eager=False)
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -374,9 +419,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     min(struct(-count, label)) aggregate (no window — the second agg is
     co-partitioned with the first on node). Lineage cut per round with
     LAZY localCheckpoints (see kcore_peel's rationale)."""
-    und = edges.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).where(F.col("u") != F.col("v")).distinct()
+    und = _undirected(edges)
     both = und.select(F.col("u").alias("node"), F.col("v").alias("peer")).unionAll(
         und.select(F.col("v").alias("node"), F.col("u").alias("peer"))
     ).localCheckpoint(eager=True)  # reused 1+rounds x
@@ -428,14 +471,23 @@ def adamic_adar(
     (u < v); the non-adjacency filter is one anti join against that
     canonical edge set.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
+    return _wedge_scores(
+        edges,
+        max_center_degree,
+        F.round(F.sum(F.lit(1.0) / F.log(F.col("deg").cast("double"))), 12),
     )
+
+
+def _wedge_scores(
+    edges: DataFrame, max_center_degree: int | None, score: Column
+) -> DataFrame:
+    """(a, b, common, score) over every NON-adjacent pair a < b with a
+    common neighbor z of degree ≤ ``max_center_degree`` (all z when
+    None): the capped wedge build shared by adamic_adar and
+    resource_allocation. ``score`` is an aggregate over the pair's
+    wedges, which carry the center degree as ``deg``."""
+    # reused: adjacency + anti join
+    e = _undirected(edges).localCheckpoint(eager=False)
     adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
         e.select(F.col("v").alias("z"), F.col("u").alias("n"))
     )
@@ -447,10 +499,7 @@ def adamic_adar(
     right = centers.select("z", F.col("n").alias("b"))
     wedges = left.join(right, "z").where(F.col("a") < F.col("b"))
     pairs = wedges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).alias("common"),
-        F.round(F.sum(F.lit(1.0) / F.log(F.col("deg").cast("double"))), 12).alias(
-            "score"
-        ),
+        F.count(F.lit(1)).alias("common"), score.alias("score")
     )
     return pairs.join(
         e,
@@ -479,34 +528,11 @@ def resource_allocation(
     lcm = 1
     for i in range(1, max_center_degree + 1):
         lcm = lcm * i // math.gcd(lcm, i)
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
-    )
-    adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("z"), F.col("u").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    deg = deg.where(F.col("deg") <= max_center_degree)
-    centers = adj.join(deg, "z")
-    left = centers.select("z", F.col("n").alias("a"), "deg")
-    right = centers.select("z", F.col("n").alias("b"))
-    wedges = left.join(right, "z").where(F.col("a") < F.col("b"))
-    pairs = wedges.groupBy("a", "b").agg(
-        F.count(F.lit(1)).alias("common"),
-        (
-            F.sum(F.expr(f"CAST({lcm} AS BIGINT) div deg")).cast("double")
-            / F.lit(float(lcm))
-        ).alias("score"),
-    )
-    return pairs.join(
-        e,
-        (F.col("a") == F.col("u")) & (F.col("b") == F.col("v")),
-        "left_anti",
+    return _wedge_scores(
+        edges,
+        max_center_degree,
+        F.sum(F.expr(f"CAST({lcm} AS BIGINT) div deg")).cast("double")
+        / F.lit(float(lcm)),
     )
 
 
@@ -526,14 +552,8 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     products stay below 2⁵³ (integers convert exactly; past that the
     coefficient itself has no meaningful ulps left).
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency both directions
-    )
+    # reused: adjacency both directions
+    e = _undirected(edges).localCheckpoint(eager=False)
     adj = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         e.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -573,14 +593,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     coefficient is one integer-over-integer double division —
     correctly rounded in both engines, no rounding needed.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: degrees + triangle pass
-    )
+    # reused: degrees + triangle pass
+    e = _undirected(edges).localCheckpoint(eager=False)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -622,13 +636,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     # Lazy lineage cuts: every iteration reads e twice and nodes twice,
     # and each normalizing total is a broadcast job that would otherwise
     # re-execute the whole derivation subtree (module docstring).
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _directed_nodes(edges)
     h = nodes.select("node", F.lit(1.0).alias("hub"))
     a = None
     for _ in range(iters):
@@ -657,81 +665,6 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
             "node", (F.col("r") / F.col("t")).alias("hub")
         )
     return h.join(a, "node").select("node", "hub", "auth")
-
-
-def _triangles(e: DataFrame, broadcast_adjacency: bool = False) -> DataFrame:
-    """(a, b, c) with a < b < c: every triangle of a canonical
-    (u < v, distinct) edge frame exactly once, via degree-ordered
-    adjacency-list intersection (the "edge iterator" formulation of
-    Cohen's map-reduce triangle algorithm): orient each edge toward the
-    higher-(degree, id) endpoint — a DAG, so each triangle has a unique
-    all-out apex — build per-node OUT-neighbor arrays, and for every
-    oriented edge (a→x) emit array_intersect(N⁺(a), N⁺(x)). The triple
-    is re-sorted to id order so downstream edge projections
-    (a,b)/(a,c)/(b,c) are already canonical.
-
-    Why intersection instead of the wedge self-join (the pre-round-9
-    shape): the wedge join MATERIALIZES Σ outdeg² candidate rows
-    through a shuffle and then semi-joins them against the edge set —
-    at sf0.1's co-basket graph that is >20M wedge rows sorted twice.
-    The intersect form ships each adjacency array once per incident
-    oriented edge (Σ outdeg ≤ |E| array references) and intersects
-    JVM-side (hash, O(|N⁺(a)|+|N⁺(x)|) per edge) — same asymptotic
-    triangle work, none of the wedge materialization. Measured at
-    sf0.1: 9.2s → 3.9s (broadcast) / 6.3s (hash) for the identical
-    1,884,488-triangle output.
-
-    ``broadcast_adjacency``: the degree and adjacency frames are
-    |V|-keyed with Σ|N⁺| = |E| total entries — broadcastable ONLY when
-    the edge set fits the driver (callers that have the edge count
-    cheaply pass edge_count ≤ 5M). At 100 TB leave False: the three joins hash
-    co-partition on the node id, the same single-key shuffle family as
-    pagerank; nothing here is ever all-pairs.
-    """
-    B = F.broadcast if broadcast_adjacency else (lambda df: df)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    lower_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        e.join(B(du), "u")
-        .join(B(dv), "v")
-        .select(
-            F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-            F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("x"),
-        )
-    )
-    adj = oriented.groupBy("a").agg(F.collect_list("x").alias("nb"))
-    with_nbrs = (
-        oriented.join(
-            B(adj.select(F.col("a").alias("_a"), F.col("nb").alias("nb_a"))),
-            F.col("a") == F.col("_a"),
-        )
-        # left: a sink node (no out-edges) has no adjacency row but its
-        # in-edges still reach here — they close no triangle (empty ∩).
-        .join(
-            B(adj.select(F.col("a").alias("_x"), F.col("nb").alias("nb_x"))),
-            F.col("x") == F.col("_x"),
-            "left",
-        )
-        .select(
-            "a",
-            "x",
-            F.array_intersect(
-                "nb_a", F.coalesce("nb_x", F.array().cast("array<long>"))
-            ).alias("ws"),
-        )
-    )
-    tri = with_nbrs.select("a", "x", F.explode("ws").alias("w"))
-    arr = F.array_sort(F.array("a", "x", "w"))
-    return tri.select(arr[0].alias("a"), arr[1].alias("b"), arr[2].alias("c"))
 
 
 def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -777,14 +710,7 @@ def ktruss_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     shrink monotonically. The support frame is lazily
     localCheckpoint-ed per round (one row per surviving edge) so the
     288M-probe initial intersect never re-executes."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges).localCheckpoint(eager=False)
     # One scalar count on the (about-to-be-materialized-anyway)
     # checkpointed frame decides the local-vs-cluster join strategy:
     # under 5M edges the adjacency/removed/delta frames are driver-safe
@@ -879,14 +805,8 @@ def jaccard_link_prediction(
     semantics); the per-endpoint degrees join back via two broadcastable
     aggregate frames keyed on the node id.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused: adjacency + anti join
-    )
+    # reused: adjacency + anti join
+    e = _undirected(edges).localCheckpoint(eager=False)
     adj = e.select(F.col("u").alias("z"), F.col("v").alias("n")).unionAll(
         e.select(F.col("v").alias("z"), F.col("u").alias("n"))
     )
@@ -929,30 +849,6 @@ def jaccard_link_prediction(
     )
 
 
-def _known_small(df: DataFrame, rows: int | None) -> DataFrame:
-    """Broadcast-hint ``df`` when the caller has MEASURED it small.
-
-    Iterative graph frames are localCheckpoint-ed RDD scans, whose size
-    estimate is the catalog default (``Long.Max``) — the planner
-    therefore picks SortMergeJoin and re-shuffles the |E|-row edges
-    frame on EVERY level even when the frontier is a few thousand rows,
-    and AQE cannot rescue it (RDD scans are not shuffle query stages,
-    so no runtime size ever becomes visible). The loops here already
-    materialize each level eagerly and know its exact count, so they
-    can make the size-based call the planner can't: hint broadcast
-    below the row threshold, fall back to the planner's own choice
-    (shuffle join) above it — exactly AQE's decision rule, applied
-    where AQE is blind. Scale-adaptive by construction: a 100 TB
-    frontier of hundreds of millions of rows exceeds the threshold and
-    keeps today's shuffle plan."""
-    import os
-
-    limit = int(os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_ROWS", "1000000"))
-    if rows is not None and rows <= limit:
-        return F.broadcast(df)
-    return df
-
-
 def seeded_bfs(
     edges: DataFrame, seeds: DataFrame, max_hops: int = 4
 ) -> DataFrame:
@@ -974,33 +870,17 @@ def seeded_bfs(
         seeds.select(F.col("node").alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
     )
-    levels = [(l0.select("seed", "node"), l0.count())]
-    dist_parts = [l0]
-    frontier, n_frontier = levels[0]
-    for hop in range(1, max_hops + 1):
-        fb = _known_small(frontier, n_frontier)
-        visited = levels[0][0]
-        for lvl, _n in levels[1:]:
-            visited = visited.unionByName(lvl)
-        n_visited = sum(n for _lvl, n in levels)
-        nxt = (
-            fb.join(edges, fb.node == edges.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(_known_small(visited, n_visited), ["seed", "node"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == 0:
-            break
-        levels.append((nxt, n_nxt))
-        dist_parts.append(nxt.select("seed", "node", F.lit(hop).alias("dist")))
-        frontier, n_frontier = nxt, n_nxt
-    dist = dist_parts[0]
-    for part in dist_parts[1:]:
-        dist = dist.unionByName(part)
+    levels = _frontier_levels(
+        edges,
+        l0,
+        ["seed", "node"],
+        lambda j: j.select("seed", F.col("dst").alias("node")).distinct(),
+        max_hops,
+    )
+    dist = levels[0][0]
+    for hop, (lvl, _n) in enumerate(levels[1:], 1):
+        dist = dist.unionByName(lvl.select("seed", "node", F.lit(hop).alias("dist")))
     return dist
 
 
@@ -1094,29 +974,16 @@ def betweenness_sample(
         seeds.select(F.col("node").alias("seed"))
         .distinct()
         .select("seed", F.col("seed").alias("node"), F.lit(1).cast("bigint").alias("sig"))
-        .localCheckpoint(eager=True)
     )
-    levels = [(l0, l0.count())]
-    frontier, n_frontier = l0, levels[0][1]
-    for _ in range(1, max_hops + 1):
-        fb = _known_small(frontier, n_frontier)
-        visited = levels[0][0].select("seed", "node")
-        for lvl, _n in levels[1:]:
-            visited = visited.unionByName(lvl.select("seed", "node"))
-        n_visited = sum(n for _lvl, n in levels)
-        nxt = (
-            fb.join(edges, fb.node == edges.src)
-            .select("seed", F.col("dst").alias("node"), "sig")
-            .groupBy("seed", "node")
-            .agg(F.sum("sig").cast("bigint").alias("sig"))
-            .join(_known_small(visited, n_visited), ["seed", "node"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == 0:
-            break
-        levels.append((nxt, n_nxt))
-        frontier, n_frontier = nxt, n_nxt
+    levels = _frontier_levels(
+        edges,
+        l0,
+        ["seed", "node"],
+        lambda j: j.select("seed", F.col("dst").alias("node"), "sig")
+        .groupBy("seed", "node")
+        .agg(F.sum("sig").cast("bigint").alias("sig")),
+        max_hops,
+    )
     # backward dependency accumulation
     deep = levels[-1][0].select(
         "seed", "node", "sig", F.lit(0.0).alias("delta")
@@ -1166,7 +1033,7 @@ def betweenness_sample(
             acc.append(cur_d)
         nxt_lvl, n_nxt_lvl = cur_d, n_cur
     if not acc:
-        return l0.select("node").limit(0).select(
+        return levels[0][0].select("node").limit(0).select(
             "node", F.lit(0.0).alias("betweenness")
         )
     allv = acc[0]
@@ -1217,13 +1084,7 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank requires iters >= 1")
     # Lazy lineage cuts on the per-iteration-reused frames (module
     # docstring).
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed_nodes(edges)
     seeds = seeds.select("node").distinct()
     ns = seeds.agg(F.count(F.lit(1)).alias("ns"))
     outdeg = edges.groupBy(F.col("src").alias("o_node")).agg(
@@ -1247,16 +1108,7 @@ def personalized_pagerank(
         (F.col("is_seed").cast("double") / F.col("ns")).alias("score"),
     )
     for _ in range(iters):
-        contrib = (
-            edges.join(scores, edges.src == scores.node)
-            .join(F.broadcast(outdeg), edges.src == F.col("o_node"))
-            .select(
-                F.col("dst"),
-                (F.col("score") / F.col("outdeg")).alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
+        contrib = _push_mass(edges, scores, outdeg)
         scores = (
             scores.join(contrib, scores.node == contrib.dst, "left")
             .select(
@@ -1294,13 +1146,7 @@ def katz_centrality(
         raise ValueError("katz_centrality requires iters >= 1")
     # Lazy lineage cuts on the per-iteration-reused frames (module
     # docstring).
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges, nodes = _directed_nodes(edges)
     scores = nodes.select("node", F.lit(1.0).alias("score"))
     for _ in range(iters):
         in_mass = (
