@@ -329,3 +329,42 @@ def test_no_vacuous_oracles(oracle):
     with ThreadPoolExecutor(max_workers=8) as ex:
         empty = sorted(k for k in ex.map(check, contract.ORACLES.items()) if k)
     assert not empty, f"vacuous (0-row or all-NULL) oracle results: {empty}"
+
+
+# The fallbacks a driver JVM without protobuf runs instead of
+# transformWithStateInPandas: applyInPandasWithState for fsm_tws, batch
+# plans for the other three.
+TWS_KEYS = [
+    "q_stream_fsm_tws",
+    "q_stream_tws_dedup",
+    "q_stream_tws_topk",
+    "q_stream_tws_chained",
+]
+
+
+@pytest.mark.parametrize("key", TWS_KEYS)
+def test_tws_fallback_parity(key, spark, oracle, monkeypatch):
+    from trembita_spark.contract import streaming_batch
+    from trembita_spark.streaming import pbcompat
+
+    tws_runs = []
+    monkeypatch.setattr(pbcompat, "tws_available", lambda spark=None: False)
+    monkeypatch.setattr(
+        streaming_batch, "run_tws", lambda *a, **kw: tws_runs.append(a)
+    )
+    _parity_check(key, spark, oracle)
+    assert not tws_runs, "the TWS path ran although the probe said no"
+
+
+def test_tws_failure_warns_and_falls_back(spark, oracle, monkeypatch):
+    """An exception on the TWS path is swallowed, but not silently: a
+    RuntimeWarning names the key and the exception type, and the
+    fallback's result still matches the oracle."""
+    from trembita_spark.contract import streaming_batch
+
+    def broken(*a, **kw):
+        raise RuntimeError("worker crashed")
+
+    monkeypatch.setattr(streaming_batch, "run_tws", broken)
+    with pytest.warns(RuntimeWarning, match="q_stream_tws_dedup.*RuntimeError"):
+        _parity_check("q_stream_tws_dedup", spark, oracle)

@@ -11,7 +11,15 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR_SMALL
 from trembita_spark.io import load_table
 from trembita_spark.operators.fsm import sessionize
-from trembita_spark.streaming.sources import events_stream, run_to_completion
+from trembita_spark.streaming import sources
+from trembita_spark.streaming.sources import (
+    events_stream,
+    rocksdb_state_provider,
+    run_to_completion,
+    run_tws,
+    staged_dir,
+    staged_stream,
+)
 from trembita_spark.streaming.stateful import sessionize_stream
 from trembita_spark.streaming.windows import tumbling_window_agg
 
@@ -78,23 +86,12 @@ def test_stream_stateful_sessionize_rocksdb_provider(spark):
     state-store provider — the credible 100 TB state backend (session
     state spills to local disk instead of executor heap). Same
     subset-vs-batch contract as the default-provider test above."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with rocksdb_state_provider(spark):
         out = run_to_completion(
             sessionize_stream(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
             "t_stream_sessions_rocksdb",
             output_mode="append",
         ).collect()
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
     batch = (
         sessionize(load_table(spark, SF_DIR_SMALL, "events"), gap_minutes=30)
         .groupBy("user_id", "session_id")
@@ -139,26 +136,10 @@ def test_stream_tws_sessionize_matches_batch(spark):
     pytest.importorskip("google.protobuf.descriptor")
     from trembita_spark.streaming.stateful import sessionize_tws
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(prov_key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_completion(
-            sessionize_tws(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
-            "t_stream_tws_sessions",
-            output_mode="append",
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+    out = run_tws(
+        sessionize_tws(events_stream(spark, SF_DIR_SMALL), gap_minutes=30),
+        "t_stream_tws_sessions",
+    ).collect()
     batch = (
         sessionize(load_table(spark, SF_DIR_SMALL, "events"), gap_minutes=30)
         .groupBy("user_id", "session_id")
@@ -173,35 +154,7 @@ def test_stream_tws_sessionize_matches_batch(spark):
     assert len(emitted) >= len(batch_set) - n_users
 
 
-def _staged_stream(spark, batches, schema):
-    """Build a file-source stream whose micro-batch ORDER is controlled:
-    one parquet file per batch, mtimes strictly increasing, and
-    maxFilesPerTrigger=1 so availableNow replays them as separate
-    micro-batches (watermark advances between batches, not within)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    stream_dir = tempfile.mkdtemp(prefix="trembita_spark_stream_batches_")
-    stage = tempfile.mkdtemp(prefix="trembita_spark_stream_stage_")
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, schema)
-        out = f"{stage}/b{i}"
-        df.coalesce(1).write.mode("overwrite").parquet(out)
-        part = glob.glob(f"{out}/part-*.parquet")[0]
-        dst = f"{stream_dir}/batch_{i}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-    return (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(stream_dir)
-    )
-
-
-def test_stream_late_data_dropped_by_watermark(spark):
+def test_stream_late_data_dropped_by_watermark(spark, tmp_path):
     # Late-data semantics, not smoke: an event older than the watermark
     # must be EXCLUDED from its (already finalized) window.
     import datetime as dt
@@ -227,7 +180,11 @@ def test_stream_late_data_dropped_by_watermark(spark):
         # dropped) and an on-time event at 12:30.
         [(4, t(10, 5), 1.0), (5, t(12, 30), 1.0)],
     ]
-    ev = _staged_stream(spark, batches, schema).withWatermark("ts", "10 minutes")
+    stages = [spark.createDataFrame(rows, schema) for rows in batches]
+    base = str(tmp_path)
+    ev = staged_stream(spark, base, staged_dir(spark, stages, base)).withWatermark(
+        "ts", "10 minutes"
+    )
     agg = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -242,7 +199,7 @@ def test_stream_late_data_dropped_by_watermark(spark):
     assert ten == [(t(10, 0), 2)], f"late row leaked into closed window: {emitted}"
 
 
-def test_stream_drop_duplicates_within_watermark(spark):
+def test_stream_drop_duplicates_within_watermark(spark, tmp_path):
     # dropDuplicatesWithinWatermark: duplicate ids arriving within the
     # watermark-retained state window are suppressed across micro-batches.
     import datetime as dt
@@ -254,7 +211,11 @@ def test_stream_drop_duplicates_within_watermark(spark):
         # duplicate id=1 (retained state → dropped) + new id=3
         [(1, t(10, 2), 9.0), (3, t(10, 20), 1.0)],
     ]
-    ev = _staged_stream(spark, batches, schema).withWatermark("ts", "30 minutes")
+    stages = [spark.createDataFrame(rows, schema) for rows in batches]
+    base = str(tmp_path)
+    ev = staged_stream(spark, base, staged_dir(spark, stages, base)).withWatermark(
+        "ts", "30 minutes"
+    )
     dedup = ev.dropDuplicatesWithinWatermark(["event_id"])
     out = run_to_completion(dedup, "t_stream_dedup_wm", output_mode="append")
     ids = sorted(r.event_id for r in out.collect())
@@ -702,22 +663,12 @@ def test_stream_outer_join_eviction_exactly_once(spark):
     assert len(emitted) == want_unmatched
 
 
-def test_tws_processing_time_timer_flushes_idle_keys(spark):
-    # Processing-time timers (timeMode="ProcessingTime") — the one TWS
-    # surface event-time keys can't cover: a quiet source never advances
-    # the watermark, so only a wall-clock timer can flush idle state.
-    # Two staged micro-batches with DISJOINT user sets: batch-1 users'
-    # counters are flushed by their timers when batch 2 arrives (its
-    # processing time is past batch-1-time + idle_ms); batch-2-only
-    # users still sit in state when availableNow drains, so they are
-    # NOT emitted. Content is deterministic even though firing time is
-    # wall-clock.
-    pytest.importorskip("google.protobuf.descriptor")
+def _idle_flush_stream(spark, base):
+    """Two staged micro-batches with DISJOINT user sets, for the
+    processing-time timer tests below."""
     import datetime as dt
 
     from pyspark.sql import types as T
-
-    from trembita_spark.streaming.stateful import idle_flush_tws
 
     schema = T.StructType(
         [
@@ -728,34 +679,32 @@ def test_tws_processing_time_timer_flushes_idle_keys(spark):
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     batch1 = [(1, t0), (1, t0 + dt.timedelta(seconds=1)), (2, t0)]
     batch2 = [(3, t0 + dt.timedelta(seconds=2))]
-    stream = _staged_stream(spark, [batch1, batch2], schema)
+    stages = [spark.createDataFrame(b, schema) for b in (batch1, batch2)]
+    return staged_stream(spark, base, staged_dir(spark, stages, base))
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(prov_key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        # idle_stop=2: with 2 staged files the availableNow flush batch
-        # is batchId 2 — the query itself never terminates (batch-2
-        # users' pending processing-time timers keep it active), so the
-        # plain await burned its full 300 s timeout for a test whose
-        # content is fixed once the flush batch commits.
-        out = run_to_completion(
-            idle_flush_tws(stream, idle_ms=1),
-            "t_tws_proc_timer",
-            output_mode="append",
-            idle_stop=2,
-        ).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+
+def test_tws_processing_time_timer_flushes_idle_keys(spark, tmp_path):
+    # Processing-time timers (timeMode="ProcessingTime") — the one TWS
+    # surface event-time keys can't cover: a quiet source never advances
+    # the watermark, so only a wall-clock timer can flush idle state.
+    # Two staged micro-batches with DISJOINT user sets: batch-1 users'
+    # counters are flushed by their timers when batch 2 arrives (its
+    # processing time is past batch-1-time + idle_ms); batch-2-only
+    # users still sit in state when availableNow drains, so they are
+    # NOT emitted. Content is deterministic even though firing time is
+    # wall-clock.
+    pytest.importorskip("google.protobuf.descriptor")
+    from trembita_spark.streaming.stateful import idle_flush_tws
+
+    stream = _idle_flush_stream(spark, str(tmp_path))
+    # idle_stop=2: with 2 staged files the availableNow flush batch is
+    # batchId 2 — the query itself never terminates (batch-2 users'
+    # pending processing-time timers keep it active), so the plain wait
+    # would run into its timeout for a test whose content is fixed once
+    # the flush batch commits.
+    out = run_tws(
+        idle_flush_tws(stream, idle_ms=1), "t_tws_proc_timer", idle_stop=2
+    ).collect()
     flushed = {(r.user_id, r.n_events) for r in out}
     # Batch-1 users MUST be flushed (batch 2's processing time is past
     # their timers). User 3's flush depends on whether availableNow
@@ -763,6 +712,21 @@ def test_tws_processing_time_timer_flushes_idle_keys(spark):
     # observed Spark 4.1 behavior — so it is allowed but not required.
     assert {(1, 2), (2, 1)} <= flushed, flushed
     assert flushed <= {(1, 2), (2, 1), (3, 1)}, flushed
+
+
+def test_stream_still_active_at_deadline_raises(spark, tmp_path, monkeypatch):
+    """A run that has not finished by the deadline must fail loudly, not
+    hand back the partial memory table. Without ``idle_stop`` the
+    processing-time timer stream above never terminates, so a short
+    deadline always expires; the query must be stopped afterwards."""
+    pytest.importorskip("google.protobuf.descriptor")
+    from trembita_spark.streaming.stateful import idle_flush_tws
+
+    monkeypatch.setattr(sources, "STREAM_TIMEOUT_S", 5)
+    stream = _idle_flush_stream(spark, str(tmp_path))
+    with pytest.raises(TimeoutError, match="t_tws_timeout"):
+        run_tws(idle_flush_tws(stream, idle_ms=1), "t_tws_timeout")
+    assert not [q for q in spark.streams.active if q.name == "t_tws_timeout"]
 
 
 def test_stream_crash_midrun_recovers_exactly_once(spark, tmp_path):

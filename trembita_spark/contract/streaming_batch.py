@@ -25,9 +25,11 @@ from trembita_spark.operators.fsm import sessionize, sessionize_fsm
 from trembita_spark.operators import timeseries as TS
 from trembita_spark.streaming.sources import (
     events_stream,
-    rocksdb_state_provider,
     run_to_completion,
-    tws_state_partitions,
+    run_tws,
+    staged_dir,
+    staged_stream,
+    wait_and_stop,
 )
 from trembita_spark.streaming.windows import (
     session_window_agg,
@@ -88,23 +90,24 @@ _SESSION_ISLANDS = """
 """
 
 
-@register(
-    "q_window_session",
-    # cmp='>=': Spark's session_window is END-EXCLUSIVE — per-event
-    # windows [ts, ts+gap) merge only when they OVERLAP, so a delta of
-    # exactly `gap` starts a NEW session. The islands oracle must flag
-    # new_s at delta >= gap to match. (The sessionize()/FSM pairings below
-    # use strict '>' on BOTH sides — a different, internally-consistent
-    # convention: "gap EXCEEDS the threshold".)
-    oracle=_SESSION_ISLANDS.format(gap_us=30 * 60 * 1_000_000, cmp=">=")
-    + """
+# cmp='>=': Spark's session_window is END-EXCLUSIVE — per-event
+# windows [ts, ts+gap) merge only when they OVERLAP, so a delta of
+# exactly `gap` starts a NEW session. The islands oracle must flag
+# new_s at delta >= gap to match. (The sessionize()/FSM pairings below
+# use strict '>' on BOTH sides — a different, internally-consistent
+# convention: "gap EXCEEDS the threshold".)
+_SESSION_WINDOW_ORACLE = _SESSION_ISLANDS.format(
+    gap_us=30 * 60 * 1_000_000, cmp=">="
+) + """
     SELECT user_id,
            min(ts) AS session_start,
            max(ts) + INTERVAL 30 MINUTE AS session_end,
            count(*) AS n_events
     FROM sess GROUP BY user_id, session_id
-    """,
-)
+    """
+
+
+@register("q_window_session", oracle=_SESSION_WINDOW_ORACLE)
 def q_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark's native session_window (merging state windows); the oracle
     # derives the same sessions via gap-islands SQL.
@@ -156,11 +159,12 @@ def q_fsm_applyinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _STREAM_SEQ = itertools.count()
 
-
-@register(
-    "q_stream_fsm_sessionize",
-    oracle=_SESSION_ISLANDS.format(gap_us=30 * 60 * 1_000_000, cmp=">")
-    + """,
+# Append-mode emission of the streaming FSM sessionizers: a session
+# appears iff gap-closed or its event-time timeout (end + gap) fell
+# behind the final watermark (max event time - 1h delay).
+_STREAM_FSM_ORACLE = _SESSION_ISLANDS.format(
+    gap_us=30 * 60 * 1_000_000, cmp=">"
+) + """,
     agg AS (
       SELECT user_id, session_id,
              min(ts) AS session_start, max(ts) AS session_end,
@@ -173,8 +177,112 @@ _STREAM_SEQ = itertools.count()
     FROM agg, wm
     WHERE NOT is_last
        OR epoch_us(w) > epoch_us(session_end) + 30 * 60 * 1000000
-    """,
-)
+    """
+
+
+def _sentinel_replay(spark: SparkSession, sf_dir: str, prefix: str, event_types):
+    """Stage the events table, then one sentinel per ``event_types``
+    entry 10h past max(ts), as TWO file-stream micro-batches under a
+    fresh ``run_tmp(prefix)`` dir. Watermarks only advance between
+    batches: the sentinel batch pushes every watermark past each real
+    event, and the availableNow no-data flush batch then emits all
+    watermark-gated state (outer-join null padding, appended windows and
+    sessions) before termination. Sentinels carry negative ids and users
+    so they join nothing; callers drop them from the result. The max(ts)
+    lookup is one single-row aggregate (scalar, sf-independent). Returns
+    ``(base, schema, sent_ts)`` for :func:`staged_stream`."""
+    from datetime import timedelta
+
+    from trembita_spark.contract import run_tmp
+
+    ev = table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    sent_ts = max_ts + timedelta(hours=10)
+    sentinels = local_rows(
+        spark,
+        [(-1 - i, sent_ts, -1 - i, t, 0.0) for i, t in enumerate(event_types)],
+        schema=ev.schema,
+    )
+    base = run_tmp(prefix)
+    return base, staged_dir(spark, [ev, sentinels], base), sent_ts
+
+
+def _user_as(name: str):
+    return F.col("user_id") if name == "user_id" else F.col("user_id").alias(name)
+
+
+def _purchase_side(stream: DataFrame, user: str = "user_id") -> DataFrame:
+    """Purchases of an events stream as (purchase_id, ``user``,
+    purchase_ts), watermarked 1h — one side of the attribution joins."""
+    return (
+        stream.where(F.col("event_type") == "purchase")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            _user_as(user),
+            F.col("ts").alias("purchase_ts"),
+        )
+        .withWatermark("purchase_ts", "1 hour")
+    )
+
+
+def _click_side(
+    stream: DataFrame, user: str = "c_user_id", with_id: bool = True
+) -> DataFrame:
+    """Clicks of an events stream as ([click_id,] ``user``, click_ts),
+    watermarked 1h — the other side of the attribution joins."""
+    click_id = [F.col("event_id").alias("click_id")] if with_id else []
+    return (
+        stream.where(F.col("event_type") == "click")
+        .select(*click_id, _user_as(user), F.col("ts").alias("click_ts"))
+        .withWatermark("click_ts", "1 hour")
+    )
+
+
+def _click_before_purchase(p_user: str = "user_id", c_user: str = "c_user_id"):
+    """Same user, click in the 30 minutes up to the purchase. Both sides'
+    watermarks plus this range bound the buffered join state (Spark
+    evicts state older than watermark+range). The oracles compare
+    integer epoch-µs so the bound is exactly Spark's µs-truncated
+    interval arithmetic."""
+    return (
+        (F.col(p_user) == F.col(c_user))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
+        & (F.col("click_ts") <= F.col("purchase_ts"))
+    )
+
+
+def _tws_or_fallback(spark: SparkSession, key: str, tws, fallback, stage=None):
+    """Return ``tws()`` — the key's transformWithStateInPandas build and
+    run — where TWS can execute, else ``fallback()``.
+
+    TWS Python workers need google.protobuf (streaming/pbcompat.py). A
+    session whose JVM was launched by a foreign harness without the shim
+    on PYTHONPATH crashes the worker at import, so any exception from
+    ``tws()`` falls back too, with a ``RuntimeWarning`` naming the key
+    and the exception type; the fallback's result is the same. ``stage``
+    runs first, OUTSIDE the swallowed region (its errors are real ones),
+    and its return value is passed to ``tws``."""
+    import warnings
+
+    from trembita_spark.streaming.pbcompat import tws_available
+
+    if tws_available(spark):
+        staged = stage() if stage is not None else ()
+        try:
+            return tws(*staged)
+        except Exception as e:
+            warnings.warn(
+                f"{key}: transformWithStateInPandas failed "
+                f"({type(e).__name__}); running the fallback",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+    return fallback()
+
+
+@register("q_stream_fsm_sessionize", oracle=_STREAM_FSM_ORACLE)
 def q_stream_fsm_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arbitrary-Python-state streaming (applyInPandasWithState FSM, the
     # reference's stateful surface) run to completion with an EXACT
@@ -194,24 +302,7 @@ def q_stream_fsm_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(out, name, output_mode="append")
 
 
-@register(
-    "q_stream_fsm_tws",
-    oracle=_SESSION_ISLANDS.format(gap_us=30 * 60 * 1_000_000, cmp=">")
-    + """,
-    agg AS (
-      SELECT user_id, session_id,
-             min(ts) AS session_start, max(ts) AS session_end,
-             CAST(count(*) AS BIGINT) AS n_events,
-             session_id = max(session_id) OVER (PARTITION BY user_id) AS is_last
-      FROM sess GROUP BY user_id, session_id
-    ),
-    wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS w FROM events)
-    SELECT user_id, n_events, session_start, session_end
-    FROM agg, wm
-    WHERE NOT is_last
-       OR epoch_us(w) > epoch_us(session_end) + 30 * 60 * 1000000
-    """,
-)
+@register("q_stream_fsm_tws", oracle=_STREAM_FSM_ORACLE)
 def q_stream_fsm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The FSM sessionizer on Spark 4's arbitrary-state API
     # (transformWithStateInPandas + StatefulProcessor + event-time
@@ -231,30 +322,25 @@ def q_stream_fsm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is row-identical (that path is q_stream_fsm_sessionize's, already
     # driver-verified). On a normal cluster install protobuf is present
     # and the TWS path always runs.
-    from trembita_spark.streaming.pbcompat import tws_available
     from trembita_spark.streaming.stateful import (
         sessionize_stream,
         sessionize_tws,
     )
 
     name = f"stream_fsm_tws_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = sessionize_tws(
-                    events_stream(spark, sf_dir), gap_minutes=30
-                )
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
-        except Exception:
-            pass  # env-shaped failure (protobuf-less worker): fall back
-    out = sessionize_stream(events_stream(spark, sf_dir), gap_minutes=30)
-    return run_to_completion(out, f"{name}_fb", output_mode="append")
+    return _tws_or_fallback(
+        spark,
+        "q_stream_fsm_tws",
+        lambda: run_tws(
+            sessionize_tws(events_stream(spark, sf_dir), gap_minutes=30), name
+        ),
+        # the _fb query name is how perfbench counts fallbacks
+        lambda: run_to_completion(
+            sessionize_stream(events_stream(spark, sf_dir), gap_minutes=30),
+            f"{name}_fb",
+            output_mode="append",
+        ),
+    )
 
 
 @register("q_stream_tumbling", oracle=_TUMBLING_ORACLE)
@@ -338,33 +424,11 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at scale). Oracle compares integer epoch-µs so the bound is exactly
     # Spark's µs-truncated interval arithmetic.
     name = f"stream_join_{next(_STREAM_SEQ)}"
-    p = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
+    p = _purchase_side(events_stream(spark, sf_dir))
+    c = _click_side(events_stream(spark, sf_dir))
+    joined = p.join(c, _click_before_purchase(), "inner").select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
     )
-    c = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "inner",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     return run_to_completion(joined, name, output_mode="append")
 
 
@@ -400,51 +464,15 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for both sides is evicted at watermark+range exactly as in
     # q_stream_join, plus the unmatched-left buffer the outer variant
     # needs (bounded by the same horizon).
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    base, schema, _ = _sentinel_replay(
+        spark, sf_dir, "stream_outer", ["purchase", "click"]
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
+    p = _purchase_side(staged_stream(spark, base, schema))
+    c = _click_side(staged_stream(spark, base, schema))
+    joined = p.join(c, _click_before_purchase(), "left_outer").select(
+        "purchase_id", "click_id", "user_id", "purchase_ts", "click_ts"
     )
-    base = run_tmp("stream_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_outer",
-    ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     out = run_to_completion(joined, name, output_mode="append")
     return out.where(F.col("purchase_id") >= 0)
 
@@ -478,51 +506,13 @@ def q_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buffered state is evicted at watermark+range — identical bound to
     # the inner/left variants; FULL adds only the second unmatched
     # buffer, not a larger horizon.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_full_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    base, schema, _ = _sentinel_replay(
+        spark, sf_dir, "stream_full_outer", ["purchase", "click"]
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
-    )
-    base = run_tmp("stream_full_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "full_outer",
-    ).select(
+    p = _purchase_side(staged_stream(spark, base, schema))
+    c = _click_side(staged_stream(spark, base, schema))
+    joined = p.join(c, _click_before_purchase(), "full_outer").select(
         "purchase_id",
         "click_id",
         F.coalesce("user_id", "c_user_id").alias("user_id"),
@@ -562,11 +552,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    wait_and_stop(q)
     return spark.read.parquet(f"{d}/out")
 
 
@@ -604,17 +590,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rollup_gapfill(table(spark, sf_dir, "events"))
 
 
-@register(
-    "q_stream_session",
-    oracle=_SESSION_ISLANDS.format(gap_us=30 * 60 * 1_000_000, cmp=">=")
-    + """
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
+@register("q_stream_session", oracle=_SESSION_WINDOW_ORACLE)
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL streaming session windows (merging per-key state windows,
     # complete output over the finite fixture) — the streamed plan must
@@ -626,17 +602,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(agg, name, output_mode="complete")
 
 
-@register(
-    "q_stream_session_append",
-    oracle=_SESSION_ISLANDS.format(gap_us=30 * 60 * 1_000_000, cmp=">=")
-    + """
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id, session_id
-    """,
-)
+@register("q_stream_session_append", oracle=_SESSION_WINDOW_ORACLE)
 def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL streaming session windows in APPEND mode: a session is only
     # emitted once the watermark passes its end (start of the gap
@@ -650,22 +616,10 @@ def q_stream_session_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the batch gap-islands SQL (identical to q_window_session's). At
     # 100 TB: per-user merging session state, evicted on emission —
     # state is bounded by OPEN sessions, not history.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_session_append_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    base, schema, _ = _sentinel_replay(
+        spark, sf_dir, "stream_session_append", ["view"]
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sentinels = local_rows(
-        spark,
-        [(-1, max_ts + timedelta(hours=10), -1, "view", 0.0)], schema=ev.schema
-    )
-    base = run_tmp("stream_session_append")
-    schema = staged_dir(spark, [ev, sentinels], base)
     agg = session_window_agg(
         staged_stream(spark, base, schema).withWatermark("ts", "1 hour")
     )
@@ -1199,11 +1153,7 @@ def q_stream_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    wait_and_stop(q)
     final = state["df"]
     # persist the materialized view the way a real pipeline would, and
     # read it back so the returned plan is the sink's contents.
@@ -2207,23 +2157,10 @@ def q_stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     # COUNT(DISTINCT) per hour bucket. At 100 TB: dedup state is
     # (window × active users) and evicted at the watermark; the count
     # state is one row per open window.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_distinct_users_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    base, schema, sent_ts = _sentinel_replay(
+        spark, sf_dir, "stream_distinct_users", ["view"]
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema
-    )
-    base = run_tmp("stream_distinct_users")
-    schema = staged_dir(spark, [ev, sentinels], base)
     s = staged_stream(spark, base, schema).withWatermark("ts", "1 hour")
     dedup = s.select(
         "ts", "user_id", F.window("ts", "1 hour").alias("w")
@@ -2973,32 +2910,11 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # click-side state still evicts at watermark+range; the semi saves
     # the pair fan-out the inner join pays.
     name = f"stream_semi_join_{next(_STREAM_SEQ)}"
-    p = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
+    p = _purchase_side(events_stream(spark, sf_dir))
+    c = _click_side(events_stream(spark, sf_dir), with_id=False)
+    joined = p.join(c, _click_before_purchase(), "left_semi").select(
+        "purchase_id", "user_id", "purchase_ts"
     )
-    c = (
-        events_stream(spark, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_semi",
-    ).select("purchase_id", "user_id", "purchase_ts")
     return run_to_completion(joined, name, output_mode="append")
 
 
@@ -3024,50 +2940,14 @@ def q_stream_right_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (a WHERE would delete the null-padded rows). Completes the
     # stream-stream join-mode matrix: inner / left / right / full /
     # semi, every one batch-exact.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
-
     name = f"stream_right_outer_join_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
+    base, schema, _ = _sentinel_replay(
+        spark, sf_dir, "stream_right_outer", ["purchase", "click"]
     )
-    max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-    sent_ts = max_ts + timedelta(hours=10)
-    sentinels = local_rows(
-        spark,
-        [(-1, sent_ts, -1, "purchase", 0.0), (-2, sent_ts, -2, "click", 0.0)],
-        schema=ev.schema,
-    )
-    base = run_tmp("stream_right_outer")
-    schema = staged_dir(spark, [ev, sentinels], base)
-    p = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    c = (
-        staged_stream(spark, base, schema)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
+    p = _purchase_side(staged_stream(spark, base, schema), user="p_user_id")
+    c = _click_side(staged_stream(spark, base, schema), user="user_id")
     joined = p.join(
-        c,
-        (F.col("p_user_id") == F.col("user_id"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 30 MINUTES"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "right_outer",
+        c, _click_before_purchase("p_user_id", "user_id"), "right_outer"
     ).select("purchase_id", "click_id", "user_id", "purchase_ts", "click_ts")
     out = run_to_completion(joined, name, output_mode="append")
     return out.where(
@@ -3103,32 +2983,27 @@ def q_stream_tws_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unavailable the batch-exact expression path computes the same
     # result (min_by struct per group), keeping the key driver-safe
     # everywhere while the TWS path runs wherever the worker can.
-    from trembita_spark.streaming.pbcompat import tws_available
     from trembita_spark.streaming.stateful import first_occurrence_tws
 
     name = f"stream_tws_dedup_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = first_occurrence_tws(events_stream(spark, sf_dir))
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    ev = table(spark, sf_dir, "events")
-    first = ev.groupBy("user_id", "event_type").agg(
-        F.min(F.struct("ts", "event_id")).alias("f")
-    )
-    return first.select(
-        "user_id",
-        "event_type",
-        F.col("f.ts").alias("first_ts"),
-        F.col("f.event_id").alias("first_event_id"),
+
+    def batch():
+        ev = table(spark, sf_dir, "events")
+        first = ev.groupBy("user_id", "event_type").agg(
+            F.min(F.struct("ts", "event_id")).alias("f")
+        )
+        return first.select(
+            "user_id",
+            "event_type",
+            F.col("f.ts").alias("first_ts"),
+            F.col("f.event_id").alias("first_event_id"),
+        )
+
+    return _tws_or_fallback(
+        spark,
+        "q_stream_tws_dedup",
+        lambda: run_tws(first_occurrence_tws(events_stream(spark, sf_dir)), name),
+        batch,
     )
 
 
@@ -3159,48 +3034,43 @@ def q_stream_tws_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (protobuf-less foreign JVM) runs the same prefix rule as a
     # user-keyed range join — per-user fan-out is (events/user)²,
     # bounded by the per-entity rate like the sequence-pattern key.
-    from trembita_spark.streaming.pbcompat import tws_available
     from trembita_spark.streaming.stateful import running_topk_entries_tws
 
     name = f"stream_tws_topk_{next(_STREAM_SEQ)}"
-    if tws_available(spark):
-        try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                out = running_topk_entries_tws(
-                    events_stream(spark, sf_dir), k=3
-                )
-                return run_to_completion(
-                    out,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    ev = table(spark, sf_dir, "events")
-    a = ev.select("user_id", "event_id", "ts", "value")
-    b = ev.select(
-        F.col("user_id").alias("b_user"),
-        F.col("event_id").alias("b_id"),
-        F.col("ts").alias("b_ts"),
-        F.col("value").alias("b_value"),
-    )
-    j = a.join(
-        b,
-        (F.col("user_id") == F.col("b_user"))
-        & (
-            (F.col("b_ts") < F.col("ts"))
-            | ((F.col("b_ts") == F.col("ts")) & (F.col("b_id") < F.col("event_id")))
+
+    def batch():
+        ev = table(spark, sf_dir, "events")
+        a = ev.select("user_id", "event_id", "ts", "value")
+        b = ev.select(
+            F.col("user_id").alias("b_user"),
+            F.col("event_id").alias("b_id"),
+            F.col("ts").alias("b_ts"),
+            F.col("value").alias("b_value"),
         )
-        & (F.col("b_value") >= F.col("value")),
-        "left",
-    )
-    return (
-        j.groupBy("user_id", "event_id", "ts", "value")
-        .agg(F.count("b_id").alias("ge_prior"))
-        .where(F.col("ge_prior") < 3)
-        .select("user_id", "event_id", "ts", "value")
+        j = a.join(
+            b,
+            (F.col("user_id") == F.col("b_user"))
+            & (
+                (F.col("b_ts") < F.col("ts"))
+                | ((F.col("b_ts") == F.col("ts")) & (F.col("b_id") < F.col("event_id")))
+            )
+            & (F.col("b_value") >= F.col("value")),
+            "left",
+        )
+        return (
+            j.groupBy("user_id", "event_id", "ts", "value")
+            .agg(F.count("b_id").alias("ge_prior"))
+            .where(F.col("ge_prior") < 3)
+            .select("user_id", "event_id", "ts", "value")
+        )
+
+    return _tws_or_fallback(
+        spark,
+        "q_stream_tws_topk",
+        lambda: run_tws(
+            running_topk_entries_tws(events_stream(spark, sf_dir), k=3), name
+        ),
+        batch,
     )
 
 
@@ -4532,60 +4402,49 @@ def q_stream_tws_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # foreign harness), like the other TWS keys. At 100 TB: dedup
     # state is O(users x types), window state one row per open hour —
     # both watermark-evicted.
-    from datetime import timedelta
-
-    from trembita_spark.contract import run_tmp
-    from trembita_spark.streaming.pbcompat import tws_available
-    from trembita_spark.streaming.sources import staged_dir, staged_stream
     from trembita_spark.streaming.stateful import first_occurrence_tws
 
     name = f"stream_tws_chained_{next(_STREAM_SEQ)}"
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    if tws_available(spark):
-        max_ts = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        sent_ts = max_ts + timedelta(hours=10)
-        sentinels = local_rows(
-        spark,
-            [(-1, sent_ts, -1, "view", 0.0)], schema=ev.schema
-        )
-        base = run_tmp("stream_tws_chained")
-        schema = staged_dir(spark, [ev, sentinels], base)
-        try:
-            # provider override + run under one session_conf_lock window
-            with rocksdb_state_provider(spark):
-                firsts = first_occurrence_tws(
-                    staged_stream(spark, base, schema), event_time_col="first_ts"
-                )
-                agg = (
-                    firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
-                    .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
-                    .select(F.col("w.start").alias("wstart"), "n_first")
-                )
-                out = run_to_completion(
-                    agg,
-                    name,
-                    output_mode="append",
-                    state_partitions=tws_state_partitions(spark),
-                )
-                return out.where(
-                    F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS")
-                )
-        except Exception:
-            pass  # env-shaped failure: fall through to the batch path
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    firsts_b = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "event_type", "ts")
-    )
-    return (
-        firsts_b.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
-        .select(F.col("w.start").alias("wstart"), "n_first")
+    def tws(base, schema, sent_ts):
+        firsts = first_occurrence_tws(
+            staged_stream(spark, base, schema), event_time_col="first_ts"
+        )
+        agg = (
+            firsts.groupBy(F.window("first_ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
+            .select(F.col("w.start").alias("wstart"), "n_first")
+        )
+        return run_tws(agg, name).where(
+            F.col("wstart") < F.lit(sent_ts) - F.expr("INTERVAL 2 HOURS")
+        )
+
+    def batch():
+        from pyspark.sql.window import Window
+
+        ev = table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+        firsts_b = (
+            ev.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .select("user_id", "event_type", "ts")
+        )
+        return (
+            firsts_b.groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_first"))
+            .select(F.col("w.start").alias("wstart"), "n_first")
+        )
+
+    return _tws_or_fallback(
+        spark,
+        "q_stream_tws_chained",
+        tws,
+        batch,
+        stage=lambda: _sentinel_replay(
+            spark, sf_dir, "stream_tws_chained", ["view"]
+        ),
     )
 
 
@@ -4782,11 +4641,7 @@ def q_stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
+        wait_and_stop(q)
     return spark.read.parquet(sink)
 
 
@@ -4841,11 +4696,7 @@ def q_stream_sink_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
+    wait_and_stop(q)
     # Loss gate BEFORE the re-delivery: the anti-join merge would
     # silently BACK-FILL any rows the stream failed to deliver (the
     # exact 0-row source-bug class the round-11 tranche caught in

@@ -23,6 +23,28 @@ ensure_protobuf_env()
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Static and adaptive broadcast threshold (rationale at the .config
+# calls); get_session(extra_conf=...) overrides any conf.
+_BROADCAST_THRESHOLD = str(8 * 1024 * 1024)
+
+
+def driver_mem_default(phys_bytes: int | None) -> str:
+    """Default driver heap: half of physical memory, capped at 16 GiB
+    (16 GiB when the host size is unknown). A heap larger than the host
+    gets the JVM killed by the kernel mid-run instead of failing an
+    allocation."""
+    cap_mib = 16 * 1024
+    if not phys_bytes:
+        return f"{cap_mib}m"
+    return f"{min(cap_mib, phys_bytes // 2 // (1024 * 1024))}m"
+
+
+def _phys_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
 
 def get_session(
     app_name: str = "trembita_spark",
@@ -56,18 +78,18 @@ def get_session(
         # ~10 partitions, idling 2/3 of the cores mid-query. 64 KB keeps
         # local parallelism at the session's width; at production shuffle
         # sizes (>= advisory 256 MB partitions) the floor is never the
-        # binding constraint, so this is local-only in effect and
-        # env-overridable for cluster tuning. Measured (noop, same box):
-        # fsm 0.61->0.52, dedup_near 1.50->1.24, tfidf 0.78->0.65,
-        # asof 0.48->0.35.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # binding constraint, so this is local-only in effect. Measured
+        # (noop, same box): fsm 0.61->0.52, dedup_near 1.50->1.24,
+        # tfidf 0.78->0.65, asof 0.48->0.35.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or driver_mem_default(_phys_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         # 8 MB broadcast threshold, applied to BOTH the static planner and
         # AQE's runtime re-plan (which otherwise converts shuffle joins
@@ -78,16 +100,9 @@ def get_session(
         # the side that fits, i.e. true dimensions; every dim here is
         # <3 MB at sf0.1 and stays broadcast). Measured on the SQL join
         # family: q5 0.89->0.77, q18 1.17->0.97, q21 1.12->0.84,
-        # q9 0.78->0.64 (noop sink, quiet box). Env-overridable for
-        # cluster tuning.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(8 * 1024 * 1024)),
-        )
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            os.environ.get("SPARK_GRAFT_BROADCAST_THRESHOLD", str(8 * 1024 * 1024)),
-        )
+        # q9 0.78->0.64 (noop sink, quiet box).
+        .config("spark.sql.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
+        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
         # managed-table warehouse (bucketed tables) — keep out of the repo;
         # env-overridable so concurrent gauntlet shards (tools/
         # run_gauntlet.py) don't race each other's fixed-name tables.

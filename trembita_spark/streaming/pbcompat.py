@@ -27,8 +27,10 @@ before the first ``getOrCreate()``. It is invoked at
 in every entry point (tests, bench.py, __spark_entry__). For a session
 whose JVM was launched by a foreign harness WITHOUT these vars, the
 worker-side import fails and callers should fall back (see
-``tws_available()``); the fallback path is applyInPandasWithState with
-identical semantics.
+``tws_available()``): ``q_stream_fsm_tws`` falls back to
+applyInPandasWithState with identical semantics, and the other TWS keys
+(``q_stream_tws_dedup``, ``q_stream_tws_topk``,
+``q_stream_tws_chained``) to batch plans with the same result.
 
 On a real cluster none of this exists: protobuf is a standard
 dependency of pyspark[connect]/[sql] installs and this module becomes a

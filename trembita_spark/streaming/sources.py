@@ -8,6 +8,7 @@ changes, the transformations are shared with batch.
 
 from __future__ import annotations
 
+import contextlib
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,45 +84,76 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", _normalize_ts(schema["ts"].dataType))
 
 
+@contextlib.contextmanager
 def rocksdb_state_provider(spark: SparkSession):
     """Context manager: set the RocksDB state-store provider (required
     by transformWithStateInPandas) for the duration of the block, then
     restore the previous value — the whole window under
     :data:`session_conf_lock` so concurrent threads can't interleave
     set/restore pairs and leak the override into the session."""
-    import contextlib
+    prov_key = "spark.sql.streaming.stateStore.providerClass"
+    with session_conf_lock:
+        prev = spark.conf.get(prov_key, None)  # None: not set in session
+        spark.conf.set(
+            prov_key,
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(prov_key)
+            else:
+                spark.conf.set(prov_key, prev)
 
-    @contextlib.contextmanager
-    def _cm():
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        with session_conf_lock:
-            try:
-                prev = spark.conf.get(prov_key)
-            except Exception:
-                prev = None
-            spark.conf.set(
-                prov_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
+
+# How long wait_and_stop lets a bounded availableNow run take. A query
+# still active then has a partial sink, so the wait raises.
+STREAM_TIMEOUT_S = 300
+
+
+def wait_and_stop(q, idle_stop: int | None = None) -> None:
+    """Wait for an availableNow query to finish, then make sure it is
+    stopped. Raises the query's own exception if it failed, and
+    ``TimeoutError`` naming it if it is still running after
+    :data:`STREAM_TIMEOUT_S`.
+
+    ``idle_stop``: a query with REGISTERED processing-time timers never
+    self-terminates under availableNow (pending timers keep it active),
+    so the wait would burn the full timeout doing nothing. When set, the
+    driver instead polls ``lastProgress`` and stops the query as soon as
+    a ZERO-input batch with batchId >= ``idle_stop`` has committed — i.e.
+    the availableNow flush batch ran after every staged data batch,
+    which is exactly the state the full wait would have stopped in.
+    Content-deterministic: nothing after the flush batch can emit (no
+    new data arrives and the timers that could still fire are, by the
+    caller's construction, content-irrelevant). Without ``idle_stop``
+    the wait is one blocking ``awaitTermination`` — a poll would add its
+    interval to every run."""
+    import time as _time
+
+    deadline = _time.monotonic() + STREAM_TIMEOUT_S
+    try:
+        if idle_stop is not None:
+            while q.isActive and _time.monotonic() < deadline:
+                lp = q.lastProgress
+                if (
+                    lp is not None
+                    and lp["numInputRows"] == 0
+                    and lp["batchId"] >= idle_stop
+                ):
+                    return
+                _time.sleep(0.25)
+        # A terminated query returns (or raises its error) at once.
+        if not q.awaitTermination(max(deadline - _time.monotonic(), 1)):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} still active after "
+                f"{STREAM_TIMEOUT_S} s"
             )
-            try:
-                yield
-            finally:
-                if prev is None:
-                    spark.conf.unset(prov_key)
-                else:
-                    spark.conf.set(prov_key, prev)
-
-    return _cm()
-
-
-def tws_state_partitions(spark: SparkSession) -> int:
-    """Preferred state partition count for transformWithState queries:
-    per-key work is Python state-server round trips, which scale with
-    the number of concurrently running workers — so size to cores/2
-    rather than the classic stateful operators' fixed-cost-minimizing
-    default (see run_to_completion)."""
-    return max(8, spark.sparkContext.defaultParallelism // 2)
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def run_to_completion(
@@ -134,7 +166,8 @@ def run_to_completion(
     """Drive a streaming DataFrame over the (finite) local fixture to
     completion into a memory sink; returns the result as a batch
     DataFrame. This is the 'streaming proof' harness: same logical plan,
-    real micro-batch execution.
+    real micro-batch execution. ``idle_stop`` is passed to
+    :func:`wait_and_stop`.
 
     State partitions: every stateful operator pays a FIXED per-partition
     cost per micro-batch (state store load + commit + task scheduling)
@@ -142,18 +175,18 @@ def run_to_completion(
     for the 0-row availableNow flush batch. Stateful partition count is
     a capacity knob sized to STATE volume, not to CPU count (it is
     pinned at checkpoint creation in production, chosen per deployment);
-    the harness derives a default from the session's parallelism and
-    lets deployments override it. Partition count only changes hash
-    placement of keys, never results — the oracle parity suite covers
-    every streaming key.
+    the harness derives a default of cores/4 (at least 8) from the
+    session's parallelism. Partition count only changes hash placement
+    of keys, never results — the oracle parity suite covers every
+    streaming key.
 
     ``state_partitions`` lets a caller override the derived default:
     transformWithState queries are bound by per-key Python state-server
     round trips, which parallelize across the partitions' workers, so
-    the TWS keys ask for MORE partitions (cores/2 measured best:
+    :func:`run_tws` asks for MORE partitions (cores/2 measured best:
     fsm_tws 8.7s@8 → 6.7s@16) while the classic stateful operators
     keep the low count their fixed per-partition store cost wants
-    (full_outer join 5.7s@8 → 7.7s@16). The env var still wins.
+    (full_outer join 5.7s@8 → 7.7s@16).
 
     The shuffle-partitions mutate/run/restore window is guarded by
     :data:`session_conf_lock` — sessions are JVM singletons, so two
@@ -162,31 +195,13 @@ def run_to_completion(
     otherwise interleave set/restore and leak a transient value into
     the session permanently. Callers that mutate OTHER session confs
     around a run (e.g. the RocksDB provider for TWS keys) must hold
-    the same lock — it is reentrant.
-
-    ``idle_stop``: a query with REGISTERED processing-time timers never
-    self-terminates under availableNow (pending timers keep it active),
-    so ``awaitTermination(300)`` burns the full timeout doing nothing.
-    When set, the driver instead polls ``lastProgress`` and stops the
-    query as soon as a ZERO-input batch with batchId >= ``idle_stop``
-    has committed — i.e. the availableNow flush batch ran after every
-    staged data batch, which is exactly the state the 300-second wait
-    would have stopped in. Content-deterministic: nothing after the
-    flush batch can emit (no new data arrives and the timers that could
-    still fire are, by the caller's construction, content-irrelevant)."""
-    import os as _os
-    import time as _time
-
+    the same lock — it is reentrant."""
     spark = df.sparkSession
-    parts = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if parts is None:
-        if state_partitions is not None:
-            parts = str(state_partitions)
-        else:
-            parts = str(max(8, spark.sparkContext.defaultParallelism // 4))
+    if state_partitions is None:
+        state_partitions = max(8, spark.sparkContext.defaultParallelism // 4)
     with session_conf_lock:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         try:
             q = (
                 df.writeStream.outputMode(output_mode)
@@ -195,26 +210,29 @@ def run_to_completion(
                 .trigger(availableNow=True)
                 .start()
             )
-            try:
-                if idle_stop is not None:
-                    deadline = _time.time() + 300
-                    while q.isActive and _time.time() < deadline:
-                        lp = q.lastProgress
-                        if (
-                            lp is not None
-                            and lp["numInputRows"] == 0
-                            and lp["batchId"] >= idle_stop
-                        ):
-                            break
-                        _time.sleep(0.25)
-                else:
-                    q.awaitTermination(300)
-            finally:
-                if q.isActive:
-                    q.stop()
+            wait_and_stop(q, idle_stop)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return df.sparkSession.table(query_name)
+    return spark.table(query_name)
+
+
+def run_tws(df: DataFrame, query_name: str, idle_stop: int | None = None):
+    """:func:`run_to_completion` for a transformWithStateInPandas query:
+    append mode, inside a :func:`rocksdb_state_provider` window (TWS
+    needs RocksDB's multi-column-family state layout), with cores/2 (at
+    least 8) state partitions — per-key work is Python state-server
+    round trips, which scale with the number of concurrently running
+    workers. ``run_to_completion`` is looked up when called, so a
+    wrapper bound over the module's name sees TWS runs too."""
+    spark = df.sparkSession
+    with rocksdb_state_provider(spark):
+        return run_to_completion(
+            df,
+            query_name,
+            output_mode="append",
+            state_partitions=max(8, spark.sparkContext.defaultParallelism // 2),
+            idle_stop=idle_stop,
+        )
 
 
 def staged_dir(spark: SparkSession, stages: list, base_dir: str) -> T.StructType:
